@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -22,8 +23,27 @@ import org.apache.spark.sql.types._
   * Input arrays are group-bounded by construction at every call site
   * (df-capped CollectCapped groups, per-order baskets); the exact-size
   * allocation is the same k(k−1)/2 structs the flatten form materialized.
+  *
+  * The input must be `array<bigint>` without null elements: any other
+  * element type, or `containsNull = true`, fails at analysis (the kernel
+  * reads every slot with `getLong`, which would pair mis-typed or null
+  * slots silently).
   */
-case class SortedPairs(child: Expression) extends UnaryExpression {
+case class SortedPairs(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes = Seq(ArrayType(LongType, containsNull = false))
+
+  // inputTypes matching ignores element nullability, so check it here
+  override def checkInputDataTypes(): TypeCheckResult =
+    super.checkInputDataTypes() match {
+      case TypeCheckResult.TypeCheckSuccess
+          if child.dataType.asInstanceOf[ArrayType].containsNull =>
+        TypeCheckResult.TypeCheckFailure(
+          "sorted_pairs needs array<bigint> without null elements, got " +
+            child.dataType.catalogString + " with containsNull = true")
+      case r => r
+    }
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("pa", LongType, nullable = false),

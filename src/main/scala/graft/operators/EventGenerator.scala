@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Md5Bucket, Md5Uuid}
+
 /** S1 — synthetic event generator, Spark-first.
   *
   * The reference expands a JSON template (`$uuid4`, `$name`, `$email`,
@@ -15,23 +17,19 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: every field derives from (seed, id) via md5, so the same
   * (numRecords, seed) always yields identical rows on any cluster size. The
-  * md5 basis also makes the generator reproducible in any SQL engine for
-  * oracle checks.
+  * md5-derived fields come from the native kernels [[graft.functions.Md5Uuid]]
+  * and [[graft.functions.Md5Bucket]] — one digest per value, no hex string —
+  * which are bit-identical to the md5/substring/conv/pmod SQL form stated on
+  * each kernel. That SQL form is the generator's portable definition: any SQL
+  * engine (the DuckDB oracle included) reproduces the rows from it.
   */
 object EventGenerator {
 
-  /** Deterministic uuid4-shaped id: md5 hex of s"$tag:$seed:" + id, spliced to
-    * 8-4-4-4-12 with the version nibble forced to '4'. Pure column expression.
+  /** Deterministic uuid4-shaped id: md5 hex of s"$tag:$seed:" + id, laid out
+    * 8-4-4-4-12 with the version nibble forced to '4'. `id` is a bigint column.
     */
-  def uuidCol(id: Column, seed: Long, tag: String): Column = {
-    val h = md5(concat(lit(s"$tag:$seed:"), id.cast("string")))
-    concat(
-      substring(h, 1, 8), lit("-"),
-      substring(h, 9, 4), lit("-4"),
-      substring(h, 14, 3), lit("-"),
-      substring(h, 17, 4), lit("-"),
-      substring(h, 21, 12))
-  }
+  def uuidCol(id: Column, seed: Long, tag: String): Column =
+    Md5Uuid(id, s"$tag:$seed:")
 
   // Small public-domain-style lookup vocabularies; indexed by a hash of the
   // row id so name/email are deterministic per row (reference analog:
@@ -44,12 +42,11 @@ object EventGenerator {
     "wilson", "anderson", "thomas", "taylor", "moore", "martin", "white", "clark")
   val Domains: Seq[String] = Seq("example.com", "test.org", "mail.net", "demo.io")
 
-  /** Deterministic index into a lookup array: low 8 hex digits of md5 mod n.
-    * (conv(hex) keeps it portable to the DuckDB oracle, unlike xxhash64.)
+  /** Deterministic index into a lookup array: the md5's first 8 hex digits,
+    * as an unsigned int, mod n (portable to the DuckDB oracle, unlike xxhash64).
     */
   private def pickIdx(id: Column, seed: Long, tag: String, n: Int): Column =
-    pmod(conv(substring(md5(concat(lit(s"$tag:$seed:"), id.cast("string"))), 1, 8), 16, 10)
-      .cast("long"), lit(n.toLong))
+    Md5Bucket(id, s"$tag:$seed:", n)
 
   private def pick(vals: Seq[String], id: Column, seed: Long, tag: String): Column = {
     val arr = array(vals.map(lit): _*)

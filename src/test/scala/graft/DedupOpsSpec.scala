@@ -105,6 +105,25 @@ class DedupOpsSpec extends SparkSpecBase {
       agg((5L, 9L)) == 2 && agg.values.sum == 9)
   }
 
+  test("SortedPairs rejects array<int> and nullable elements at analysis") {
+    import graft.functions.SortedPairs
+    import org.apache.spark.sql.AnalysisException
+    // getLong over int slots or null slots would pair garbage silently; the
+    // input type check turns both into analysis errors
+    val ints = Seq(Seq(1, 2, 3)).toDF("ds")
+    assert(ints.schema("ds").dataType.catalogString == "array<int>")
+    intercept[AnalysisException](ints.select(SortedPairs(col("ds"))))
+    val nullable = Seq(Seq[java.lang.Long](1L, null, 3L)).toDF("ds")
+    assert(nullable.schema("ds").dataType.catalogString == "array<bigint>")
+    val e = intercept[AnalysisException](nullable.select(SortedPairs(col("ds"))))
+    assert(e.getMessage.contains("containsNull"), e.getMessage)
+    // the call sites' input shape still analyzes: sorted, null-free longs
+    val ok = Seq(Seq(3L, 1L, 2L)).toDF("ds")
+      .select(SortedPairs(sort_array(col("ds"))).as("p"))
+    assert(ok.collect().head.getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+  }
+
   test("WinnowFingerprints equals the composable transform/array_min/slice formula") {
     import graft.functions.WinnowFingerprints
     val w = 4

@@ -184,14 +184,15 @@ class ScaleConfSpec extends SparkSpecBase {
   }
 
   test("ivfCache changes cost attribution, never results") {
-    // s04/s21 share one materialized IVF index when the knob is on; the
+    // s04/s21/s05 share one materialized IVF index when the knob is on; the
     // committed oracles run with it OFF — this parity pins that the
     // quantized-long vectors, IEEE-double norms, the parquet-cached cell
     // assignment, and the re-aggregated one-row codebook all reproduce
     // both the search results and the recall-sweep doubles bit-identically
+    // (s05 through its MaterializedIvfCells arm, which the bench runs)
     def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
       .collect().map(_.toSeq).toSeq
-    val names = Seq("s04_ann_ivf", "s21_nprobe_sweep")
+    val names = Seq("s04_ann_ivf", "s21_nprobe_sweep", "s05_ann_recall")
     names.foreach(n => assert(SparkEntry.queries.contains(n),
       s"IVF pack name $n moved — update this spec"))
     val off = names.map(n => n -> run(n)).toMap
